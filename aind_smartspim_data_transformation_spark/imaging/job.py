@@ -13,7 +13,10 @@ subprocess `aws s3 sync` + local delete    | write directly to the target
                                            | (s3a:// URI on a cluster)
 derivatives passthrough upload (S10)       | binary copy, driver-side
 
-Returns a JobResponse-like dict (status_code / message / duration).
+Returns a JobResponse-like dict: ``status_code``, ``message``,
+``written`` (group URIs), ``metrics`` and ``route`` — ``"fused"`` or
+``"chunk-table"``, the ingest path taken (None when the partition had
+no stacks to write).
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import functions as F
 from aind_smartspim_data_transformation_spark.config.settings import ImagingJobSettings
 from aind_smartspim_data_transformation_spark.imaging.pyramid import build_pyramid
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+    _fs_for,
     write_ome_zarr_all,
 )
 from aind_smartspim_data_transformation_spark.sources.acquisition import (
@@ -95,6 +99,9 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     # subprocess `aws s3 sync`, no post-upload rmtree (the reference's
     # S9 flow, `smartspim_job.py:169-195`).
     out = settings.s3_location or str(settings.output_directory)
+    # Resolve the output filesystem on the driver before any Spark job:
+    # an unknown URI scheme fails here, not inside the write tasks.
+    _fs_for(out)
 
     voxel_zyx = get_voxel_resolution(spark, f"{root}/acquisition.json")
     validate_extensions(spark, f"{root}/SmartSPIM")
@@ -130,6 +137,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 "message": "empty partition",
                 "written": [],
                 "metrics": {},
+                "route": None,
             }
 
     # Fused zero-shuffle path (imaging/fused.py): "auto" takes it when
@@ -176,6 +184,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 ),
                 "written": written,
                 "metrics": metrics,
+                "route": "fused",
             }
 
     chunks = _ingest_chunks(spark, settings, root)
@@ -224,6 +233,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
         "message": f"wrote {len(written)} stacks in {time.time() - start:.1f}s",
         "written": written,
         "metrics": obs.get,
+        "route": "chunk-table",
     }
 
 
@@ -231,8 +241,6 @@ def _copy_tree(src: Path, dst_root: str) -> None:
     """Recursive copy of a local folder to a local path OR any
     pyarrow.fs URI (s3:// file:// ...) — driver-side, derivatives are
     small metadata files (reference S10)."""
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import _fs_for
-
     fs, base = _fs_for(dst_root)
     for p in sorted(src.rglob("*")):
         if not p.is_file():

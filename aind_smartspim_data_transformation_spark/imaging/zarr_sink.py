@@ -118,17 +118,33 @@ def pad_block(arr: np.ndarray, dims) -> np.ndarray:
     return full
 
 
+# Hadoop's S3 connector schemes: the same bucket/key space pyarrow.fs
+# reaches as ``s3://`` (it rejects these with "Unrecognized filesystem
+# type").
+_S3_ALIASES = ("s3a://", "s3n://")
+
+
+def pyarrow_uri(root: str) -> str:
+    """``root`` with a Hadoop-style ``s3a://``/``s3n://`` scheme
+    rewritten to ``s3://``; any other path or URI unchanged."""
+    for alias in _S3_ALIASES:
+        if root.startswith(alias):
+            return "s3://" + root[len(alias):]
+    return root
+
+
 def _fs_for(root: str):
     """(pyarrow filesystem, filesystem-local path) for a plain local
-    path or any URI pyarrow.fs resolves (``file://``, ``s3://``,
-    ``gs://``, ``hdfs://``...).  This is what makes the sink
-    object-store capable: executors and the driver write through the
-    same abstraction, no subprocess staging (reference S9 shells out to
-    ``aws s3 sync``, `io/utils.py:138-201`)."""
+    path or any URI pyarrow.fs resolves (``file://``, ``s3://`` and its
+    Hadoop aliases ``s3a://``/``s3n://``, ``gs://``, ``hdfs://``...).
+    This is what makes the sink object-store capable: executors and the
+    driver write through the same abstraction, no subprocess staging
+    (reference S9 shells out to ``aws s3 sync``, `io/utils.py:138-201`).
+    An unknown scheme raises ``pyarrow.ArrowInvalid``."""
     from pyarrow import fs as pafs
 
     if "://" in root:
-        return pafs.FileSystem.from_uri(root)
+        return pafs.FileSystem.from_uri(pyarrow_uri(root))
     return pafs.LocalFileSystem(), root
 
 

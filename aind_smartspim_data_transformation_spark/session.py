@@ -13,13 +13,31 @@ Two postures:
 The reference hand-rolls its parallelism (round-robin stack partitioning
 across N independent processes, smartspim_job.py:30-63); here the
 scheduler owns it, so the session config *is* the parallelism model.
+
+Python task workers start from :mod:`.worker_daemon`
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``.  Spark
+puts ``pyspark.zip``, the py4j zip and the spark-core jar on the
+workers' ``PYTHONPATH``, and each task's ``importlib.invalidate_caches()``
+re-reads every archive importer's central directory — about 90 ms per
+task on Python 3.11.  The daemon drops the jar (no Python in it) and
+the zips when the same pyspark/py4j versions import from a directory,
+then runs ``pyspark.daemon``; forked workers inherit the cleaned path.
+The module must be importable where the daemon starts: locally
+``build_local_session`` puts the package root on the workers'
+``PYTHONPATH``; on a cluster the package belongs in the executor image
+(SCALE.md §1).
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# Directory holding the package: workers import the daemon module and
+# the package's task functions from it, whatever the driver's cwd.
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 # Timezone is pinned to UTC so timestamp semantics agree with the
 # DuckDB oracle (duckdb timestamps are UTC-naive).
@@ -55,6 +73,9 @@ _COMMON = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
+    # Python worker daemon with the redundant archives dropped from
+    # sys.path before pyspark loads (worker_daemon.py).
+    "spark.python.daemon.module": "aind_smartspim_data_transformation_spark.worker_daemon",
 }
 
 
@@ -124,6 +145,7 @@ def build_local_session(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)

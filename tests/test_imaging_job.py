@@ -138,6 +138,40 @@ def test_job_remote_uri_output(spark, tmp_path):
     assert not (tmp_path / "unused_local").exists()
 
 
+def test_hadoop_s3_schemes_map_to_pyarrow_s3():
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import pyarrow_uri
+
+    assert pyarrow_uri("s3a://bucket/a/b.ome.zarr") == "s3://bucket/a/b.ome.zarr"
+    assert pyarrow_uri("s3n://bucket/key") == "s3://bucket/key"
+    for unchanged in ("s3://bucket/key", "file:///tmp/x", "/tmp/s3a://x", "gs://b/k"):
+        assert pyarrow_uri(unchanged) == unchanged
+
+
+def test_job_unknown_output_scheme_fails_before_any_spark_job(spark, tmp_path):
+    """The output filesystem resolves on the driver first: a scheme
+    pyarrow.fs does not know fails with no Spark job started."""
+    import pyarrow as pa
+
+    root = tmp_path / "ds"
+    make_dataset(root, height=16, width=16)
+    settings = ImagingJobSettings(
+        input_source=str(root),
+        output_directory=str(tmp_path / "unused_local"),
+        s3_location="foo://bucket/out",
+        downsample_levels=1,
+    )
+    sc = spark.sparkContext
+    group = f"unknown-scheme-{tmp_path.name}"
+    sc.setJobGroup(group, "output scheme check")
+    try:
+        with pytest.raises(pa.ArrowInvalid, match="foo"):
+            run_imaging_job(spark, settings)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_partition_stacks_reference_counts():
     """Reference partitioning goldens (`tests/test_smartspim_job.py:40-54`):
     75 elements → 5 partitions of 15; → 2 partitions of 38/37; all
@@ -222,7 +256,7 @@ def test_job_ingest_paths_write_identical_stores(spark, tmp_path):
     # 'auto' takes the fused path at this (tiny) geometry
     (auto, auto_resp) = run("auto")
     assert auto == fused
-    assert "(fused)" in auto_resp["message"]
+    assert auto_resp["route"] == "fused"
     # the availability gate: this pyspark has the DataSource API
     assert hasattr(spark, "dataSource")
 
@@ -1110,8 +1144,8 @@ def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
 
     at, at_resp = run("at", task_bytes)          # fits exactly → fused
     over, over_resp = run("over", task_bytes - 1)  # one byte short → fallback
-    assert "(fused)" in at_resp["message"]
-    assert "(fused)" not in over_resp["message"]
+    assert at_resp["route"] == "fused"
+    assert over_resp["route"] == "chunk-table"
     assert at == over  # the route never changes the bytes
 
 
@@ -1200,7 +1234,7 @@ def test_band_plan_cap_never_changes_store_bytes(
             ),
         )
         assert resp["status_code"] == 200
-        assert "(fused)" in resp["message"]
+        assert resp["route"] == "fused"
         return {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))

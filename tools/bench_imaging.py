@@ -152,11 +152,7 @@ def run_e2e(spark, n_slices: int) -> dict:
             # regression (deep stacks silently on the chunk-table
             # fallback at half throughput) was invisible in BENCH JSON
             # until this field existed
-            "route": (
-                "fused"
-                if "(fused)" in resp.get("message", "")
-                else "chunk-table"
-            ),
+            "route": resp["route"],
         }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

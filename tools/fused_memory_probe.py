@@ -180,14 +180,13 @@ def main() -> int:
         wall = time.perf_counter() - t0
         peak = sampler.stop()
         assert resp["status_code"] == 200
-        routed_fused = "(fused)" in resp["message"]
-        assert routed_fused == (tag == "fused"), (
-            f"auto routed {'fused' if routed_fused else 'chunk-table'} "
-            f"under cap={cap} — expected {tag}"
+        route = resp["route"]
+        assert route == ("fused" if tag == "fused" else "chunk-table"), (
+            f"auto routed {route} under cap={cap} — expected {tag}"
         )
         results[tag] = {
             "cap_bytes": cap,
-            "route": "fused" if routed_fused else "chunk-table",
+            "route": route,
             "wall_s": round(wall, 2),
             "peak_tree_rss_mib": round(peak / 1024),
             "mbps": round(raw / 2**20 / wall, 1),

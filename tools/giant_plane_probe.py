@@ -118,8 +118,7 @@ def main() -> None:
         )
         wall = time.perf_counter() - t0
         assert resp["status_code"] == 200, resp
-        route = "fused" if "(fused)" in resp.get("message", "") else "chunk-table"
-        assert route == "chunk-table", resp
+        assert resp["route"] == "chunk-table", resp
         print(
             json.dumps(
                 {
@@ -130,7 +129,7 @@ def main() -> None:
                     "wall_sec": round(wall, 2),
                     "xy": xy,
                     "slices": n_slices,
-                    "route": route,
+                    "route": resp["route"],
                     "probe_task_bytes": tb,
                 }
             )
